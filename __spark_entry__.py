@@ -31,6 +31,7 @@ from esper_tv_spark.functions.aggregates import (
 )
 from esper_tv_spark.operators import dedup, intervals, similarity, text
 from esper_tv_spark.session import ensure_runtime_confs
+from esper_tv_spark.sources.index_cache import evict_stale, fingerprint, index_cache
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1382,45 +1383,6 @@ GROUP BY r_name
 """
 
 
-def _dir_fingerprint(path: str) -> str:
-    """Cheap freshness fingerprint of a parquet file/dir: hash of every
-    (relpath, size, mtime_ns) — pure os.stat, no data scan, and regenerated
-    testdata (same path, new rows) changes it. The lesson of the q79 stale-
-    cache defect: never key a disk cache on a path basename alone."""
-    import hashlib
-
-    h = hashlib.sha256()
-    if os.path.isdir(path):
-        for root, _dirs, files in sorted(os.walk(path)):
-            for fn in sorted(files):
-                st = os.stat(os.path.join(root, fn))
-                h.update(f"{os.path.relpath(os.path.join(root, fn), path)}:{st.st_size}:{st.st_mtime_ns};".encode())
-    else:
-        st = os.stat(path)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:16]
-
-
-def _evict_stale_siblings(prefix: str, keep: str) -> None:
-    """Best-effort cleanup of fingerprint-keyed cache dirs from prior data
-    generations: without it, every testdata regeneration leaves a dead
-    index/labels copy in the temp dir forever.  `keep` is a PREFIX —
-    every sibling of the current data generation survives (several
-    configs of one index family share a fingerprint: q100's rank-init
-    and q103's trained-groups layouts), only stale generations go."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.gettempdir()
-    try:
-        for name in os.listdir(tmp):
-            full = os.path.join(tmp, name)
-            if name.startswith(prefix) and not full.startswith(keep) and os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-    except OSError:
-        pass
-
-
 def _parquet_num_rows(path: str) -> int:
     """Exact row count from parquet FOOTER metadata only — no Spark job,
     no data scan (the lakehouse equivalent is table-stats/manifest counts).
@@ -1492,29 +1454,21 @@ def q51_near_dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     without hand regeneration.
 
     Index reuse: the banded projection + norms are persisted once per
-    dataset fingerprint (build_srp_index) and probed thereafter — repeat
-    invocations skip the dominant n_bands x n_planes projection cost
-    entirely. The fingerprint is stat-based (size+mtime), so regenerated
-    data rebuilds instead of serving stale buckets."""
-    import tempfile
-
+    dataset fingerprint (build_srp_index via sources/index_cache) and
+    probed thereafter — repeat invocations skip the dominant n_bands x
+    n_planes projection cost entirely. The fingerprint is stat-based
+    (size+mtime), so regenerated data rebuilds instead of serving stale
+    buckets."""
     emb = _t(spark, sf_dir, "embeddings")
     src = os.path.join(sf_dir, "embeddings.parquet")
     n_planes, n_bands, seed = dedup.recommended_planes(_parquet_num_rows(src)), 16, 42
     dim = _parquet_list_dim(src)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        f"esper_tv_srp_idx_{sf_tag}_{tag}_p{n_planes}b{n_bands}s{seed}",
+    idx = index_cache(
+        "srp", src, sf_dir, f"p{n_planes}b{n_bands}s{seed}",
+        lambda p: dedup.build_srp_index(
+            emb, p, n_planes=n_planes, seed=seed, n_bands=n_bands, dim=dim
+        ),
     )
-    if not os.path.exists(os.path.join(idx, "norms", "_SUCCESS")):
-        # evict THIS sf's indexes from prior data generations (other sf
-        # dirs keep theirs — the prefix is sf-scoped)
-        _evict_stale_siblings(f"esper_tv_srp_idx_{sf_tag}_", keep=idx)
-        dedup.build_srp_index(
-            emb, idx, n_planes=n_planes, seed=seed, n_bands=n_bands, dim=dim
-        )
     # fast=True: the r11 gather-scoring rung (vector matrix loaded once
     # per worker from the source parquet; one einsum per Arrow batch of
     # candidate pairs) — interleaved A/B at sf1: slow best 9.9s vs fast
@@ -2526,24 +2480,15 @@ def q78_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_index_dir(spark: SparkSession, sf_dir: str, n_cells: int = 16) -> str:
-    """Build (once per dataset fingerprint) and return the persisted
-    deterministic IVF index for `sf_dir`'s embeddings — the frozen-store
-    pattern of the reference's repeated embedding queries
-    (face_embeddings.py:74-96). Stat-based fingerprint: regenerated data
-    rebuilds instead of serving stale cells; prior generations of THIS
-    sf's index are evicted."""
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    idx = os.path.join(
-        tempfile.gettempdir(), f"esper_tv_ivf_idx_{sf_tag}_{tag}_c{n_cells}"
+    """The persisted deterministic IVF index over `sf_dir`'s embeddings,
+    built once per dataset fingerprint — the frozen-store pattern of the
+    reference's repeated embedding queries (face_embeddings.py:74-96)."""
+    return index_cache(
+        "ivf", os.path.join(sf_dir, "embeddings.parquet"), sf_dir, f"c{n_cells}",
+        lambda p: similarity.ivf_build_index(
+            _t(spark, sf_dir, "embeddings"), p, n_cells=n_cells
+        ),
     )
-    if not os.path.exists(os.path.join(idx, "centroids", "_SUCCESS")):
-        _evict_stale_siblings(f"esper_tv_ivf_idx_{sf_tag}_", keep=idx)
-        similarity.ivf_build_index(_t(spark, sf_dir, "embeddings"), idx, n_cells=n_cells)
-    return idx
 
 
 def q80_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2644,35 +2589,19 @@ def _hier_ivf_index_dir(
     spark: SparkSession, sf_dir: str, n_cells: int = 16, n_groups: int = 4,
     train_iters: int = 0,
 ) -> str:
-    """Build (once per dataset fingerprint) the TWO-LEVEL deterministic
-    IVF index: same frozen-store pattern as `_ivf_index_dir`, with the
-    coarse quantizer grouped (similarity._write_centroids).  The
-    completeness sentinel stays centroids/_SUCCESS — groups/ is written
-    FIRST, so the sentinel implies a complete two-level layout.
-    `train_iters>0` trains the level-1 group centers (lloyd_train) —
-    the q103 layout; 0 keeps the rank-init grouping (q100/q101)."""
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    suffix = f"t{train_iters}" if train_iters else ""
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        f"esper_tv_hivf_idx_{sf_tag}_{tag}_c{n_cells}g{n_groups}{suffix}",
-    )
-    if not os.path.exists(os.path.join(idx, "centroids", "_SUCCESS")):
-        _evict_stale_siblings(
-            f"esper_tv_hivf_idx_{sf_tag}_",
-            keep=os.path.join(
-                tempfile.gettempdir(), f"esper_tv_hivf_idx_{sf_tag}_{tag}"
-            ),
-        )
-        similarity.ivf_build_index(
-            _t(spark, sf_dir, "embeddings"), idx, n_cells=n_cells,
+    """The TWO-LEVEL deterministic IVF index: same frozen store as
+    `_ivf_index_dir`, with the coarse quantizer grouped
+    (similarity._write_centroids).  `train_iters>0` trains the level-1
+    group centers (lloyd_train) — the q103 layout; 0 keeps the rank-init
+    grouping (q100/q101)."""
+    return index_cache(
+        "hivf", os.path.join(sf_dir, "embeddings.parquet"), sf_dir,
+        f"c{n_cells}g{n_groups}t{train_iters}",
+        lambda p: similarity.ivf_build_index(
+            _t(spark, sf_dir, "embeddings"), p, n_cells=n_cells,
             n_groups=n_groups, group_train_iters=train_iters,
-        )
-    return idx
+        ),
+    )
 
 
 def q100_hier_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2767,51 +2696,6 @@ ORDER BY cosine_sim DESC, cand.vec_id ASC LIMIT 10
 """
 
 
-def _retired_ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per dataset fingerprint) an IVF index whose HOTTEST
-    cell for query vec_id=7 has been fully deleted, purged, and RETIRED
-    (streaming.ann.compact_posting_lists(purge=True,
-    retire_empty_cells=True)): the victim is the top-1 ranked cell by
-    the probe's own rounded-cosine order, so the retirement demonstrably
-    changes which cells a pruned probe scans at every scale.  The
-    mutation chain is atomic w.r.t. the cache: the _Q104_DONE marker is
-    written LAST, and an incomplete dir is rebuilt from scratch."""
-    import shutil
-    import tempfile
-
-    from esper_tv_spark.streaming.ann import ann_delete, compact_posting_lists
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    idx = os.path.join(
-        tempfile.gettempdir(), f"esper_tv_rivf_idx_{sf_tag}_{tag}_c16"
-    )
-    if not os.path.exists(os.path.join(idx, "_Q104_DONE")):
-        _evict_stale_siblings(f"esper_tv_rivf_idx_{sf_tag}_", keep=idx)
-        shutil.rmtree(idx, ignore_errors=True)
-        emb = _t(spark, sf_dir, "embeddings")
-        similarity.ivf_build_index(emb, idx, n_cells=16)
-        qv = [
-            float(x)
-            for x in emb.where(F.col("vec_id") == 7).select("embedding").first()[0]
-        ]
-        cents, _allowed = similarity._probe_centroids(spark, idx, [0], [qv], 1, 6)
-        pairs, _cells, _cv = similarity._rank_probe_cells(cents, [0], [qv], 1, 6)
-        victim = int(pairs[0][1])
-        victim_ids = [
-            int(r["id"])
-            for r in spark.read.parquet(
-                os.path.join(idx, "cells", f"cell={victim}")
-            ).select("id").collect()
-        ]
-        ann_delete(spark, idx, victim_ids)
-        compact_posting_lists(spark, idx, purge=True, retire_empty_cells=True)
-        with open(os.path.join(idx, "_Q104_DONE"), "w") as f:
-            f.write(str(victim))
-    return idx
-
-
 def q104_retired_cell_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe over an index whose hottest cell was deleted, purged, and
     RETIRED (census-driven centroid retirement — streaming/ann.py
@@ -2827,10 +2711,34 @@ def q104_retired_cell_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving vector) -> ranking restricted to live cells -> rerank
     over surviving candidates.  The hash only matches if the dead
     centroid was actually dropped from the ranking.  Reference shape:
-    index maintenance on face_embeddings.py:74-96's frozen store."""
+    index maintenance on face_embeddings.py:74-96's frozen store.
+
+    The whole build + delete + purge + retire chain runs before the
+    index is published, so the cache never serves a partial lifecycle."""
+    from esper_tv_spark.streaming.ann import ann_delete, compact_posting_lists
+
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 7).select("embedding").first()[0]]
-    idx = _retired_ivf_index_dir(spark, sf_dir)
+
+    def build(path: str) -> None:
+        similarity.ivf_build_index(emb, path, n_cells=16)
+        # the victim is the top-1 ranked cell by the probe's own
+        # rounded-cosine order
+        cents, _allowed = similarity._probe_centroids(spark, path, [0], [qv], 1, 6)
+        pairs, _cells, _cv = similarity._rank_probe_cells(cents, [0], [qv], 1, 6)
+        victim = int(pairs[0][1])
+        victim_ids = [
+            int(r["id"])
+            for r in spark.read.parquet(
+                os.path.join(path, "cells", f"cell={victim}")
+            ).select("id").collect()
+        ]
+        ann_delete(spark, path, victim_ids)
+        compact_posting_lists(spark, path, purge=True, retire_empty_cells=True)
+
+    idx = index_cache(
+        "rivf", os.path.join(sf_dir, "embeddings.parquet"), sf_dir, "c16", build
+    )
     return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3, fast=True)
 
 
@@ -3113,33 +3021,6 @@ ORDER BY qid, cosine_sim DESC, vec_id
 """
 
 
-def _tomb_ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per dataset fingerprint) an IVF index carrying LOGICAL
-    deletes: ids 0, 3, 12 tombstoned via streaming.ann.ann_delete.  The
-    cache sentinel requires BOTH centroids/_SUCCESS and the tombstone
-    table's _SUCCESS — a crash between build and delete must rebuild,
-    not serve an undeleted index."""
-    import tempfile
-
-    from esper_tv_spark.streaming.ann import ann_delete
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    idx = os.path.join(
-        tempfile.gettempdir(), f"esper_tv_tivf_idx_{sf_tag}_{tag}_c16"
-    )
-    done = all(
-        os.path.exists(os.path.join(idx, d, "_SUCCESS"))
-        for d in ("centroids", "tombstones")
-    )
-    if not done:
-        _evict_stale_siblings(f"esper_tv_tivf_idx_{sf_tag}_", keep=idx)
-        similarity.ivf_build_index(_t(spark, sf_dir, "embeddings"), idx, n_cells=16)
-        ann_delete(spark, idx, [0, 3, 12])
-    return idx
-
-
 def q102_ivf_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe over an index with LOGICAL DELETES — the lifecycle op
     the insert/compact/recenter trio was missing.  A delete at 100 TB
@@ -3155,9 +3036,18 @@ def q102_ivf_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes, and the oracle replays exactly that: full-corpus
     assignment + probe selection, with only the candidate rows
     filtered."""
+    from esper_tv_spark.streaming.ann import ann_delete
+
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
-    idx = _tomb_ivf_index_dir(spark, sf_dir)
+
+    def build(path: str) -> None:
+        similarity.ivf_build_index(emb, path, n_cells=16)
+        ann_delete(spark, path, [0, 3, 12])
+
+    idx = index_cache(
+        "tivf", os.path.join(sf_dir, "embeddings.parquet"), sf_dir, "c16", build
+    )
     return similarity.ivf_probe_index(spark, idx, qv, 10, n_probe=3, fast=True)
 
 
@@ -3721,29 +3611,6 @@ FROM a WHERE rn = 1 GROUP BY subspace, code ORDER BY subspace, code
 """
 
 
-def _pq_store_dir(spark: SparkSession, sf_dir: str, m: int = 8, k: int = 16) -> str:
-    """Build (once per dataset fingerprint) and return the persisted
-    deterministic PQ store for `sf_dir`'s embeddings — same stat-based
-    fingerprint + stale-sibling eviction stance as `_ivf_index_dir`."""
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    idx = os.path.join(
-        tempfile.gettempdir(), f"esper_tv_pq_store_{sf_tag}_{tag}_m{m}k{k}"
-    )
-    if not os.path.exists(os.path.join(idx, "codebooks", "_SUCCESS")):
-        _evict_stale_siblings(f"esper_tv_pq_store_{sf_tag}_", keep=idx)
-        # dim pinned like Q88_SQL's hardcoded 8-wide subspace slices (the
-        # q81 stance): both engines quantize the FIRST 64 dims whatever
-        # the corpus width, so the oracle replays cross-scale unchanged
-        similarity.pq_build_store(
-            _t(spark, sf_dir, "embeddings"), idx, m=m, k=k, dim=64
-        )
-    return idx
-
-
 def q88_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ asymmetric-distance top-k over a PERSISTED store
     (similarity.pq_build_store / pq_probe_store): the deterministic
@@ -3757,10 +3624,16 @@ def q88_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC sum end-to-end from the base table, so a single wrong stored
     code or LUT cell fails the gate.  Completes the build-once family:
     SRP (q51), IVF (q80/q87), PQ (q81/q88) — reference pattern
-    face_embeddings.py:74-96 (frozen store, repeated queries)."""
+    face_embeddings.py:74-96 (frozen store, repeated queries).  dim is
+    pinned like Q88_SQL's hardcoded 8-wide subspace slices (the q81
+    stance): both engines quantize the FIRST 64 dims whatever the corpus
+    width, so the oracle replays cross-scale unchanged."""
     emb = _t(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).select("embedding").first()[0]]
-    store = _pq_store_dir(spark, sf_dir, m=8, k=16)
+    store = index_cache(
+        "pq", os.path.join(sf_dir, "embeddings.parquet"), sf_dir, "m8k16",
+        lambda p: similarity.pq_build_store(emb, p, m=8, k=16, dim=64),
+    )
     return similarity.pq_probe_store(spark, store, qv, 10, fast=True)
 
 
@@ -3814,29 +3687,17 @@ FROM s ORDER BY adist ASC, vec_id ASC LIMIT 10
 def _ivfpq_index_dir(
     spark: SparkSession, sf_dir: str, n_cells: int = 16, m: int = 8, k: int = 16
 ) -> str:
-    """Build (once per dataset fingerprint) and return the persisted
-    IVF-PQ index for `sf_dir`'s embeddings — same stat-based fingerprint
-    + stale-sibling eviction stance as `_ivf_index_dir`/`_pq_store_dir`."""
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    idx = os.path.join(
-        tempfile.gettempdir(), f"esper_tv_ivfpq_idx_{sf_tag}_{tag}_c{n_cells}m{m}k{k}"
+    """The persisted IVF-PQ index over `sf_dir`'s embeddings.  dim pinned
+    like Q88_SQL's 8-wide subspace slices (the q81/q88 stance): both
+    engines quantize the FIRST 64 dims whatever the corpus width, so the
+    oracle replays cross-scale unchanged."""
+    return index_cache(
+        "ivfpq", os.path.join(sf_dir, "embeddings.parquet"), sf_dir,
+        f"c{n_cells}m{m}k{k}",
+        lambda p: similarity.ivfpq_build_index(
+            _t(spark, sf_dir, "embeddings"), p, n_cells=n_cells, m=m, k=k, dim=64
+        ),
     )
-    if not (
-        os.path.exists(os.path.join(idx, "codebooks", "_SUCCESS"))
-        and os.path.exists(os.path.join(idx, "meta.json"))
-    ):
-        _evict_stale_siblings(f"esper_tv_ivfpq_idx_{sf_tag}_", keep=idx)
-        # dim pinned like Q88_SQL's 8-wide subspace slices (the q81/q88
-        # stance): both engines quantize the FIRST 64 dims whatever the
-        # corpus width, so the oracle replays cross-scale unchanged
-        similarity.ivfpq_build_index(
-            _t(spark, sf_dir, "embeddings"), idx, n_cells=n_cells, m=m, k=k, dim=64
-        )
-    return idx
 
 
 def q92_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3951,28 +3812,22 @@ def _q94_rotation(sf_dir: str) -> list[list[float]]:
 
 
 def _q94_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per dataset fingerprint) the OPQ-rotated IVF-PQ index
-    over the first-64-dim slice of the embeddings."""
-    import tempfile
+    """The OPQ-rotated IVF-PQ index over the first-64-dim slice of the
+    embeddings."""
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    idx = os.path.join(tempfile.gettempdir(), f"esper_tv_opq_idx_{sf_tag}_{tag}")
-    if not (
-        os.path.exists(os.path.join(idx, "codebooks", "_SUCCESS"))
-        and os.path.exists(os.path.join(idx, "meta.json"))
-    ):
-        _evict_stale_siblings(f"esper_tv_opq_idx_{sf_tag}_", keep=idx)
+    def build(path: str) -> None:
         emb64 = _t(spark, sf_dir, "embeddings").select(
             "vec_id",
             F.slice(F.col("embedding").cast("array<double>"), 1, 64).alias("embedding"),
         )
         similarity.ivfpq_build_index(
-            emb64, idx, n_cells=16, m=8, k=16, dim=64,
+            emb64, path, n_cells=16, m=8, k=16, dim=64,
             opq_rotation=_q94_rotation(sf_dir),
         )
-    return idx
+
+    return index_cache(
+        "opq", os.path.join(sf_dir, "embeddings.parquet"), sf_dir, "c16m8k16", build
+    )
 
 
 def q94_opq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4103,23 +3958,14 @@ FROM s ORDER BY adist ASC, vec_id ASC LIMIT 10
 
 
 def _q95_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per dataset fingerprint) the persisted IVF-SQ8 index
-    over the embeddings (codes over the first 64 dims, the q92 stance)."""
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    idx = os.path.join(tempfile.gettempdir(), f"esper_tv_ivfsq_idx_{sf_tag}_{tag}")
-    if not (
-        os.path.exists(os.path.join(idx, "centroids", "_SUCCESS"))
-        and os.path.exists(os.path.join(idx, "meta.json"))
-    ):
-        _evict_stale_siblings(f"esper_tv_ivfsq_idx_{sf_tag}_", keep=idx)
-        similarity.ivfsq_build_index(
-            _t(spark, sf_dir, "embeddings"), idx, n_cells=16, dim=64
-        )
-    return idx
+    """The persisted IVF-SQ8 index over the embeddings (codes over the
+    first 64 dims, the q92 stance)."""
+    return index_cache(
+        "ivfsq", os.path.join(sf_dir, "embeddings.parquet"), sf_dir, "c16d64",
+        lambda p: similarity.ivfsq_build_index(
+            _t(spark, sf_dir, "embeddings"), p, n_cells=16, dim=64
+        ),
+    )
 
 
 def q95_ivfsq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4379,26 +4225,15 @@ ORDER BY qid, adist ASC, vec_id
 
 
 def _q98_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per dataset fingerprint) the RESIDUAL IVF-PQ index
-    (by_residual=True, rank-based coarse quantizer so the oracle can
-    replay the codebook seeds) — same fingerprint + eviction stance as
-    `_ivfpq_index_dir`."""
-    import tempfile
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(src)
-    idx = os.path.join(tempfile.gettempdir(), f"esper_tv_ivfpqres_idx_{sf_tag}_{tag}")
-    if not (
-        os.path.exists(os.path.join(idx, "codebooks", "_SUCCESS"))
-        and os.path.exists(os.path.join(idx, "meta.json"))
-    ):
-        _evict_stale_siblings(f"esper_tv_ivfpqres_idx_{sf_tag}_", keep=idx)
-        similarity.ivfpq_build_index(
-            _t(spark, sf_dir, "embeddings"), idx,
+    """The RESIDUAL IVF-PQ index (by_residual=True, rank-based coarse
+    quantizer so the oracle can replay the codebook seeds)."""
+    return index_cache(
+        "ivfpqres", os.path.join(sf_dir, "embeddings.parquet"), sf_dir, "c16m8k16",
+        lambda p: similarity.ivfpq_build_index(
+            _t(spark, sf_dir, "embeddings"), p,
             n_cells=16, m=8, k=16, dim=64, by_residual=True,
-        )
-    return idx
+        ),
+    )
 
 
 def q98_ivfpq_residual_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4702,9 +4537,10 @@ def q79_label_writeback(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repeat calls free). Stale siblings from prior generations are
     # best-effort evicted.
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tag = _dir_fingerprint(os.path.join(sf_dir, "lineitem.parquet"))
-    base = os.path.join(tempfile.gettempdir(), f"esper_tv_writeback_{sf_tag}_{tag}")
-    _evict_stale_siblings(f"esper_tv_writeback_{sf_tag}_", keep=base)
+    tag = fingerprint(os.path.join(sf_dir, "lineitem.parquet"))
+    name = f"esper_tv_writeback_{sf_tag}_{tag}"
+    base = os.path.join(tempfile.gettempdir(), name)
+    evict_stale(f"esper_tv_writeback_{sf_tag}_", keep=name)
     write_derived_table(labels, base, job=f"precision_labels_{sf_tag}")
     back = read_derived_table(spark, base)
     return back.groupBy("l_returnflag").agg(

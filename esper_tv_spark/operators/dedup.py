@@ -722,13 +722,17 @@ def _near_dup_pairs_gather(
     )
     import os as _os
 
+    from esper_tv_spark.sources.index_cache import fingerprint
+
     norm_files = tuple(
         _os.path.join(r, fn)
         for r, _d, fs in _os.walk(norms_path)
         for fn in fs
         if fn.endswith(".parquet")
     )
-    key = f"{files}|{norm_files}"
+    # keyed on stat fingerprints, not paths alone: a file rewritten at the
+    # same path must not be served from a reused worker's stale matrix
+    key = "|".join(f"{f}:{fingerprint(f)}" for f in files + norm_files)
 
     def score(batches):
         import numpy as np

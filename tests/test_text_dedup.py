@@ -640,3 +640,52 @@ def test_srp_index_probe_fast_matches_slow(spark, tmp_path):
     )
     fb = rows(near_dup_pairs_from_index(local, idx, threshold=0.2, fast=True))
     assert fb == slow
+
+
+def test_srp_index_probe_fast_sees_file_rewritten_at_same_path(spark, tmp_path):
+    """The gather path's per-worker matrix cache must notice a vector
+    file rewritten at the SAME path: a path-only cache key served the
+    old vectors to every reused Python worker.  The rewrite negates half
+    the vectors, so norms (and the persisted index) stay valid while
+    many cosines flip sign."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from esper_tv_spark.operators.dedup import (
+        build_srp_index,
+        near_dup_pairs_from_index,
+    )
+
+    t = pq.read_table(
+        "/root/testdata/sf0.001/embeddings.parquet", columns=["vec_id", "embedding"]
+    )
+    ids = t["vec_id"].to_numpy()
+    dim = len(t["embedding"][0])
+    mat = t["embedding"].combine_chunks().flatten().to_numpy().reshape(len(ids), dim)
+    path = str(tmp_path / "vecs.parquet")
+
+    def write(m):
+        emb_col = pa.FixedSizeListArray.from_arrays(pa.array(m.ravel()), dim)
+        pq.write_table(
+            pa.table({"vec_id": ids, "embedding": emb_col.cast(pa.list_(pa.float32()))}),
+            path,
+        )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    write(mat)
+    emb = spark.read.parquet(path)
+    idx = str(tmp_path / "srp_rewrite")
+    build_srp_index(emb, idx, n_planes=4, n_bands=8, dim=dim)
+    before = rows(near_dup_pairs_from_index(emb, idx, threshold=0.2, fast=True))
+
+    flipped = mat.copy()
+    flipped[ids % 2 == 1] *= -1.0
+    write(flipped)
+    emb = spark.read.parquet(path)
+    slow = rows(near_dup_pairs_from_index(emb, idx, threshold=0.2))
+    fast = rows(near_dup_pairs_from_index(emb, idx, threshold=0.2, fast=True))
+    assert slow != before
+    assert fast == slow

@@ -30,6 +30,7 @@ from esper_tv_spark.functions.aggregates import (
     weighted_sum_var,
 )
 from esper_tv_spark.operators import dedup, intervals, similarity, text
+from esper_tv_spark.plans.partitions import parquet_list_dim, parquet_num_rows
 from esper_tv_spark.session import ensure_runtime_confs
 from esper_tv_spark.sources.index_cache import evict_stale, fingerprint, index_cache
 
@@ -1383,53 +1384,6 @@ GROUP BY r_name
 """
 
 
-def _parquet_num_rows(path: str) -> int:
-    """Exact row count from parquet FOOTER metadata only — no Spark job,
-    no data scan (the lakehouse equivalent is table-stats/manifest counts).
-    Works for a single file or a directory of part files."""
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    total += pq.read_metadata(os.path.join(root, fn)).num_rows
-        return total
-    return pq.read_metadata(path).num_rows
-
-
-def _parquet_list_dim(path: str, col: str = "embedding") -> int:
-    """Embedding dimensionality from ONE row of one column via pyarrow —
-    a driver-side micro-read (single row group page), never a Spark job.
-    Parquet footers don't record list lengths, so this is the cheapest
-    honest probe; it unpins the dim-64 assumption so scale fixtures can
-    carry higher-dim vectors (at dim 64 the cross-pair cosine noise floor
-    sigma ~ 1/sqrt(64) = 0.125 makes ANY threshold degenerate at 4e12
-    pairs — see tools/make_scale.py)."""
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        # recurse the whole tree (partitioned datasets nest part files in
-        # key=value subdirs); take the first part file found, determinism
-        # via sorted dirs + files
-        found = None
-        for root, dirs, files in os.walk(path):
-            dirs.sort()
-            for fn in sorted(files):
-                if fn.endswith(".parquet"):
-                    found = os.path.join(root, fn)
-                    break
-            if found:
-                break
-        if found is None:
-            raise FileNotFoundError(f"no .parquet part files under {path}")
-        path = found
-    pf = pq.ParquetFile(path)
-    batch = next(pf.iter_batches(batch_size=1, columns=[col]))
-    return len(batch.column(0)[0].as_py())
-
-
 def q51_near_dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (dedup family), SCALE PATH:
     signed-random-projection buckets block the comparison, so candidate
@@ -1461,8 +1415,8 @@ def q51_near_dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets."""
     emb = _t(spark, sf_dir, "embeddings")
     src = os.path.join(sf_dir, "embeddings.parquet")
-    n_planes, n_bands, seed = dedup.recommended_planes(_parquet_num_rows(src)), 16, 42
-    dim = _parquet_list_dim(src)
+    n_planes, n_bands, seed = dedup.recommended_planes(parquet_num_rows(src)), 16, 42
+    dim = parquet_list_dim(src)
     idx = index_cache(
         "srp", src, sf_dir, f"p{n_planes}b{n_bands}s{seed}",
         lambda p: dedup.build_srp_index(
@@ -1504,8 +1458,8 @@ def _q51_sql(n_planes: int | None = None, n_bands: int = 16, seed: int = 42) -> 
     # path), not surface later as an opaque oracle hash mismatch
     try:
         if n_planes is None:
-            n_planes = dedup.recommended_planes(_parquet_num_rows(src))
-        dim = _parquet_list_dim(src)
+            n_planes = dedup.recommended_planes(parquet_num_rows(src))
+        dim = parquet_list_dim(src)
     except Exception as e:
         if explicit:
             raise RuntimeError(
@@ -2331,7 +2285,7 @@ def q85_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from esper_tv_spark.operators.dedup import recommended_clusters, semantic_dedup
 
     emb = _t(spark, sf_dir, "embeddings")
-    k = recommended_clusters(_parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet")))
+    k = recommended_clusters(parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet")))
     # r10: serve the contract through the production BLAS rungs
     # (fast_assign GEMM assignment + fast_pairs GEMM pair scoring) — the
     # same twin-flip as the ANN family; pytest pins twin equality and the
@@ -2468,7 +2422,7 @@ def q78_logreg_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the frozen model's width follows the corpus (footer-adjacent one-row
     # probe, no Spark job) so scale fixtures may carry higher-dim vectors
-    dim = _parquet_list_dim(os.path.join(sf_dir, "embeddings.parquet"))
+    dim = parquet_list_dim(os.path.join(sf_dir, "embeddings.parquet"))
     w = random_hyperplanes(dim, 1, seed=5)[0]
     emb = _t(spark, sf_dir, "embeddings")
     scored = logreg_score(emb, w, bias=-0.05)
@@ -4578,7 +4532,7 @@ def _oracle_embed_dim() -> int:
         "embeddings.parquet",
     )
     try:
-        return _parquet_list_dim(src)
+        return parquet_list_dim(src)
     except Exception as e:
         if explicit:
             raise RuntimeError(

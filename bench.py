@@ -378,6 +378,7 @@ def main() -> None:
                 semantic_dedup,
             )
             from esper_tv_spark.plans.cache import release_all
+            from esper_tv_spark.plans.partitions import parquet_num_rows
 
             want = expected_pairs(scale_dir, 50)
             dup_ids = sorted(b for _a, b in want)
@@ -399,9 +400,7 @@ def main() -> None:
                     "tools/make_scale.py (embed_dim=256); recall cannot be "
                     "measured against an absent ground truth"
                 )
-            n = entry_mod._parquet_num_rows(
-                os.path.join(scale_dir, "embeddings.parquet")
-            )
+            n = parquet_num_rows(os.path.join(scale_dir, "embeddings.parquet"))
             k = recommended_clusters(n)
             cents = (
                 emb.orderBy(F.col("vec_id").asc())

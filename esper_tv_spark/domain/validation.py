@@ -157,7 +157,6 @@ def bootstrap_adjusted_totals(
     trials: int = 200,
     k: int = 100,
     seed: int = 42,
-    one_pass: bool | None = None,
 ) -> DataFrame:
     """Bootstrap bias/std of per-class detection totals, with and without
     confusion-matrix adjustment — the reference's screentime_validation
@@ -197,7 +196,7 @@ def bootstrap_adjusted_totals(
         F.col(pred_col).alias("pred"),
         F.col(true_col).alias("truth"),
     )
-    # one_pass=None decides FROM THE DATA (r10 VERDICT #4, the
+    # One pass or five is decided FROM THE DATA (r10 VERDICT #4, the
     # triangle_count broadcast-budget stance): the five aggregation
     # consumers below (cmat / unit_counts / units / full / true_tot) each
     # rescan `labeled` — five concurrent tiny aggregates WIN at bench
@@ -208,23 +207,11 @@ def bootstrap_adjusted_totals(
     # site-persisted and every consumer regroups the tiny aggregate
     # (counts are additive, so each derived aggregate is IDENTICAL —
     # parity-pinned in tests/test_validation.py).
-    if one_pass is None:
-        from esper_tv_spark.plans.partitions import input_bytes
+    from esper_tv_spark.plans import partitions
 
-        try:
-            files = labeled.inputFiles()
-        except Exception:
-            files = []
-        paths = [f[7:] if f.startswith("file://") else f for f in files]
-        floor_n = int(
-            labeled.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        # engage once the detection table is a genuinely wide scan:
-        # ~4 extra rescans x input bytes vs one persisted aggregate
-        one_pass = bool(paths) and (
-            input_bytes(paths) / (256 * 1024 * 1024) > floor_n
-        )
-    if one_pass:
+    # engage once the detection table is a genuinely wide scan (blowup
+    # 1.0): ~4 extra rescans x input bytes vs one persisted aggregate
+    if partitions.wider_than_floor(labeled, 1.0):
         from esper_tv_spark.plans.cache import register_persisted
 
         base = register_persisted(

@@ -304,42 +304,31 @@ def lsh_near_dup(
     n_bands: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_shingles: bool | None = None,
 ) -> DataFrame:
     """The fused near-dup pipeline: LSH candidate generation + exact
     Jaccard verification sharing ONE shingle-set table. The set build is
     the only wide shuffle the substrate pays; signatures are projections
     over it and verification is array_intersect over two joins against it.
 
-    cache_shingles=None (default) decides FROM THE DATA whether the shared
-    substrate is cached (guide §5 "caching is only worth it when
-    recomputing is more expensive than the memory pressure"): cache only
-    when the corpus's advised shuffle width (input bytes x the ~30x
-    shingle blowup / 256MB tasks) exceeds the session's partition floor —
-    i.e. when the shingle build is a genuinely wide multi-task shuffle
-    whose 3x recompute (signatures + both verify joins) dominates the
-    cache-write barrier.  Below that, parallel recompute wins: MEASURED
+    Whether the shared substrate is cached is decided FROM THE DATA
+    (guide §5 "caching is only worth it when recomputing is more
+    expensive than the memory pressure"): cache only when the corpus's
+    advised shuffle width (input bytes x the ~30x shingle blowup / 256MB
+    tasks, `plans.partitions.wider_than_floor`) exceeds the session's
+    partition floor — i.e. when the shingle build is a genuinely wide
+    multi-task shuffle whose 3x recompute (signatures + both verify
+    joins) dominates the cache-write barrier.  Below that, parallel recompute wins: MEASURED
     at sf0.1 (3.75 -> 2.82 s mean interleaved A/B) AND sf1 (10.43 ->
     9.81 s), rows identical at both scales; the r4 sf100 rehearsal
     corpus resolves True and keeps the r2-r5 cached plan."""
-    s = shingle_sets(df, shingle_n, id_col, text_col)
-    if cache_shingles is None:
-        # decide from THIS input's bytes only (not advise_for_df, whose
-        # session-ratcheted initialPartitionNum would make the choice
-        # depend on which queries ran earlier in the session)
-        from esper_tv_spark.plans.partitions import input_bytes
+    from esper_tv_spark.plans import partitions
+    from esper_tv_spark.plans.cache import register_persisted
 
-        try:
-            files = df.inputFiles()
-        except Exception:
-            files = []
-        paths = [f[7:] if f.startswith("file://") else f for f in files]
-        floor_n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        cache_shingles = bool(paths) and (
-            input_bytes(paths) * 30.0 / (256 * 1024 * 1024) > floor_n
-        )
-    if cache_shingles:
-        s = s.cache()
+    s = shingle_sets(df, shingle_n, id_col, text_col)
+    # ~30x blowup: ~3x parquet decompression x ~10x set-over-text growth.
+    # Site-registered, so each call releases the previous call's table.
+    if partitions.wider_than_floor(df, 30.0):
+        s = register_persisted("dedup.lsh_near_dup.shingles", s)
     pairs = lsh_candidate_pairs(
         df, n_hashes, shingle_n, n_bands, id_col, text_col, sets=s
     )
@@ -603,32 +592,28 @@ def _estimated_vector_bytes(df: DataFrame, norms_path: str) -> int | None:
     from ONE row of the live table's first backing parquet file. Pure
     metadata reads — no Spark job. None when the inputs aren't
     file-backed (small-scale/in-memory callers: broadcast is safe there)."""
-    import os as _os
-
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from esper_tv_spark.plans.partitions import (
+        input_paths,
+        parquet_list_dim,
+        parquet_num_rows,
+    )
+
     try:
-        n_rows = 0
-        for root, _dirs, files in _os.walk(norms_path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    n_rows += pq.read_metadata(_os.path.join(root, fn)).num_rows
-        files = [f[7:] if f.startswith("file://") else f for f in df.inputFiles()]
+        n_rows = parquet_num_rows(norms_path)
+        files = input_paths(df)
         if not files or n_rows == 0:
             return None
-        pf = pq.ParquetFile(files[0])
-        batch = next(pf.iter_batches(batch_size=1))
-        dim = elem = None
-        import pyarrow as pa
-
-        for col in batch.schema.names:
-            typ = batch.schema.field(col).type
-            if pa.types.is_list(typ) or pa.types.is_large_list(typ):
-                dim = len(batch.column(col)[0].as_py())
-                elem = typ.value_type.bit_width // 8
-                break
-        if dim is None:
+        lists = [
+            f for f in pq.read_schema(files[0])
+            if pa.types.is_list(f.type) or pa.types.is_large_list(f.type)
+        ]
+        if not lists:
             return None
+        dim = parquet_list_dim(files[0], lists[0].name)
+        elem = lists[0].type.value_type.bit_width // 8
         # x2: measured LongHashedRelation overhead over the nominal row
         # bytes (the sf100 rehearsal built 8.1GiB from a 4.2GB estimate)
         return n_rows * (dim * elem + 48) * 2
@@ -715,14 +700,14 @@ def _near_dup_pairs_gather(
     measured 3-4x SLOWER than the expression path at sf1 (the n·bands
     vector shuffle plus per-group applyInPandas overhead dwarfed the
     fold savings).  This shape moves ZERO vector bytes."""
-    import pandas as pd
-
-    files = tuple(
-        f[7:] if f.startswith("file://") else f for f in df.inputFiles()
-    )
     import os as _os
 
+    import pandas as pd
+
+    from esper_tv_spark.plans.partitions import input_paths
     from esper_tv_spark.sources.index_cache import fingerprint
+
+    files = tuple(input_paths(df))
 
     norm_files = tuple(
         _os.path.join(r, fn)
@@ -797,7 +782,11 @@ def near_dup_pairs_from_index(
 
     from esper_tv_spark.operators.similarity import dot
 
-    from esper_tv_spark.plans.partitions import advise_for_df
+    from esper_tv_spark.plans.partitions import (
+        advise_for_df,
+        broadcast_budget_bytes,
+        input_paths,
+    )
 
     spark = df.sparkSession
     bands = spark.read.parquet(os.path.join(path, "bands"))
@@ -819,10 +808,12 @@ def near_dup_pairs_from_index(
     )
     if fast:
         est = _estimated_vector_bytes(df, os.path.join(path, "norms"))
-        files = df.inputFiles()
-        from esper_tv_spark.plans.partitions import broadcast_budget_bytes as _bb
-
-        if files and est is not None and est <= 6 * 1024**3 and est <= _bb(spark):
+        # est is None unless the table is file-backed
+        if (
+            est is not None
+            and est <= 6 * 1024**3
+            and est <= broadcast_budget_bytes(spark)
+        ):
             return _near_dup_pairs_gather(
                 df, cand, os.path.join(path, "norms"), threshold, id_col, vec_col
             )
@@ -855,8 +846,6 @@ def near_dup_pairs_from_index(
     # stands, with the documented multi-TB exchange spread across the
     # cluster — at that corpus size a deployment pre-buckets the index
     # and vector tables by id so the attach is shuffle-free.
-    from esper_tv_spark.plans.partitions import broadcast_budget_bytes
-
     est_bytes = _estimated_vector_bytes(df, os.path.join(path, "norms"))
     if est_bytes is None:
         # distinguish WHY the estimate failed: a table with no backing
@@ -865,7 +854,7 @@ def near_dup_pairs_from_index(
         # file-backed table whose footers we cannot read (remote FS, odd
         # layout) gets the conservative shuffle join — but say so, because
         # the plan cliff is ~3 orders of magnitude on the pair stream.
-        if not df.inputFiles():
+        if not input_paths(df):
             an, bn = F.broadcast(an), F.broadcast(bn)
         else:
             import warnings
@@ -1408,7 +1397,6 @@ def repeated_ngram_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_gram_docs: int | None = None,
-    dup_via_window: bool | None = None,
 ) -> DataFrame:
     """Maximal cross-document repeated token spans — exact substring-level
     dedup (the "repeated n-gram span removal" pass LLM corpora run after
@@ -1432,9 +1420,9 @@ def repeated_ngram_spans(
     TWICE and recomputed the tokenize+explode once per consumer
     (guide §2.4 — measured at sf0.1: 3 exchanges -> 2, 2.33s -> ~1.4s,
     byte-identical output).  The window buffers each gram's distinct-doc
-    set in ONE partition, so `dup_via_window=None` (default) keeps it
-    only below corpus scale (input-bytes heuristic, same stance as
-    lsh_near_dup's cache_shingles); past the threshold the two-shuffle
+    set in ONE partition, so it is kept only below corpus scale
+    (`plans.partitions.wider_than_floor`, the same input-bytes rule as
+    lsh_near_dup's shingle cache); past the threshold the two-shuffle
     groupBy(h)+count_distinct + semi-join-back returns — identical
     output (parity-pinned in tests), bounded per-task state.  Span
     merging is one window per doc (gaps-and-islands).
@@ -1458,28 +1446,18 @@ def repeated_ngram_spans(
         ).alias("g"),
     ).select(id_col, F.col("g.p").alias("p"), F.col("g.h").alias("h"))
 
-    if dup_via_window is None:
-        # The window buffers each gram's FULL distinct-doc id set in one
-        # window partition before max_gram_docs can drop anything — a
-        # stop-word gram appearing in millions of docs is a per-task
-        # memory cliff at corpus scale (r10 ADVICE).  Decide from THIS
-        # input's bytes, same stance as lsh_near_dup's cache_shingles:
-        # window (one shuffle, faster — measured at sf0.1) only while
-        # the exploded gram stream stays below the session's partition
-        # floor x 256MB tasks; past that the two-shuffle groupBy +
-        # semi-join bounds per-task state to running aggregates.
-        from esper_tv_spark.plans.partitions import input_bytes
+    from esper_tv_spark.plans import partitions
 
-        try:
-            files = df.inputFiles()
-        except Exception:
-            files = []
-        paths = [f[7:] if f.startswith("file://") else f for f in files]
-        floor_n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        dup_via_window = (not paths) or (
-            input_bytes(paths) * 8.0 / (256 * 1024 * 1024) <= floor_n
-        )
-    if dup_via_window:
+    # The window buffers each gram's FULL distinct-doc id set in one
+    # window partition before max_gram_docs can drop anything — a
+    # stop-word gram appearing in millions of docs is a per-task memory
+    # cliff at corpus scale (r10 ADVICE).  Decide from THIS input's
+    # bytes, same stance as lsh_near_dup's shingle cache: window (one
+    # shuffle, faster — measured at sf0.1) only while the exploded gram
+    # stream (~8x blowup) stays below the session's partition floor x
+    # 256MB tasks; past that the two-shuffle groupBy + semi-join bounds
+    # per-task state to running aggregates.
+    if not partitions.wider_than_floor(df, 8.0):
         wh = Window.partitionBy("h")
         nd = F.size(F.collect_set(id_col).over(wh))
         keep = nd >= F.lit(min_docs)

@@ -18,6 +18,10 @@ safe by construction: AQE coalesces unused partitions back down, which is
 exactly the documented AQE pattern (set initial high, let runtime
 shrink). The helper therefore only ever RAISES the number — never below
 the session's configured parallelism.
+
+This module is the ONE reader of input size from metadata: backing files
+(`input_paths`), bytes, footer row counts, list lengths, and the
+size-adaptive operator predicate (`wider_than_floor`).
 """
 
 from __future__ import annotations
@@ -28,6 +32,18 @@ import os
 from pyspark.sql import SparkSession
 
 _INITIAL_KEY = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+_TASK_BYTES = 256 * 1024 * 1024
+
+
+def input_paths(df) -> list[str]:
+    """Local paths of the DataFrame's backing files (`df.inputFiles()` —
+    file-listing metadata, no Spark job), `file://` stripped.  Empty for
+    inputs with no files (memory, streams) or when the listing fails."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return []
+    return [f[7:] if f.startswith("file://") else f for f in files]
 
 
 def input_bytes(paths: list[str] | str) -> int:
@@ -48,7 +64,7 @@ def advise_shuffle_partitions(
     spark: SparkSession,
     paths: list[str] | str,
     blowup: float = 3.0,
-    target_task_bytes: int = 256 * 1024 * 1024,
+    target_task_bytes: int = _TASK_BYTES,
     max_partitions: int = 4096,
 ) -> int:
     """Size AQE's initial shuffle-partition count from input bytes.
@@ -91,7 +107,7 @@ def advise_shuffle_partitions(
     return max(n, prev)
 
 
-def advise_for_df(df, blowup: float, target_task_bytes: int = 256 * 1024 * 1024) -> int:
+def advise_for_df(df, blowup: float, target_task_bytes: int = _TASK_BYTES) -> int:
     """Default-on shuffle sizing for wide-shuffle OPERATORS: derive the
     input bytes from the DataFrame's own backing files (`df.inputFiles()`
     — file-listing metadata, no Spark job) and apply
@@ -104,16 +120,71 @@ def advise_for_df(df, blowup: float, target_task_bytes: int = 256 * 1024 * 1024)
     post-shuffle subtrees) report no files and the session floor stands —
     the advice is best-effort, never wrong, because AQE coalesces any
     over-advice away."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if not files:
+    paths = input_paths(df)
+    if not paths:
         return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    paths = [f[7:] if f.startswith("file://") else f for f in files]
     return advise_shuffle_partitions(
         df.sparkSession, paths, blowup=blowup, target_task_bytes=target_task_bytes
     )
+
+
+def wider_than_floor(df, blowup: float) -> bool:
+    """True when THIS input's bytes x `blowup` / 256MB tasks exceed the
+    session's `spark.sql.shuffle.partitions` floor — the size-adaptive
+    operator switch.  Reads the input's own files, not the
+    session-ratcheted `initialPartitionNum` (which would make the choice
+    depend on which queries ran earlier).  False for inputs with no
+    backing files: in-memory frames are small by construction."""
+    paths = input_paths(df)
+    floor_n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return bool(paths) and input_bytes(paths) * blowup / _TASK_BYTES > floor_n
+
+
+def parquet_num_rows(path: str) -> int:
+    """Exact row count from parquet FOOTER metadata only — no Spark job,
+    no data scan (the lakehouse equivalent is table-stats/manifest counts).
+    Works for a single file or a directory of part files."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        total = 0
+        for root, _dirs, files in os.walk(path):
+            for fn in files:
+                if fn.endswith(".parquet"):
+                    total += pq.read_metadata(os.path.join(root, fn)).num_rows
+        return total
+    return pq.read_metadata(path).num_rows
+
+
+def parquet_list_dim(path: str, col: str = "embedding") -> int:
+    """Length of a list column (embedding dimensionality) from ONE row via
+    pyarrow — a local micro-read (single row group page), never a
+    Spark job.  Parquet footers don't record list lengths, so this is the
+    cheapest honest probe; it unpins the dim-64 assumption so scale
+    fixtures can carry higher-dim vectors (at dim 64 the cross-pair cosine
+    noise floor sigma ~ 1/sqrt(64) = 0.125 makes ANY threshold degenerate
+    at 4e12 pairs — see tools/make_scale.py)."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        # recurse the whole tree (partitioned datasets nest part files in
+        # key=value subdirs); take the first part file found, determinism
+        # via sorted dirs + files
+        found = None
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for fn in sorted(files):
+                if fn.endswith(".parquet"):
+                    found = os.path.join(root, fn)
+                    break
+            if found:
+                break
+        if found is None:
+            raise FileNotFoundError(f"no .parquet part files under {path}")
+        path = found
+    pf = pq.ParquetFile(path)
+    batch = next(pf.iter_batches(batch_size=1, columns=[col]))
+    return len(batch.column(0)[0].as_py())
 
 
 def _parse_jvm_size(s: str) -> int:

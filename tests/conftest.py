@@ -15,3 +15,23 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def force_wider_than_floor(monkeypatch):
+    """Pin the answer of `plans.partitions.wider_than_floor`, the one
+    size-adaptive seam every switching operator looks up at call time:
+    `force(True)` / `force(False)` pins a branch, `force(None)` restores
+    the real input-bytes rule."""
+    from esper_tv_spark.plans import partitions
+
+    real = partitions.wider_than_floor
+
+    def force(value):
+        monkeypatch.setattr(
+            partitions,
+            "wider_than_floor",
+            real if value is None else (lambda df, blowup: value),
+        )
+
+    return force

@@ -170,13 +170,13 @@ def test_repeated_spans_max_gram_docs_cap(spark):
     assert uncapped.count() == 5 and capped.count() == 0
 
 
-def test_repeated_spans_dup_mode_parity(spark):
-    """dup_via_window True (one-window collect_set) / False (two-shuffle
-    groupBy+semi-join, the corpus-scale shape) / None (data-adaptive)
-    produce IDENTICAL spans — including under the max_gram_docs cap,
-    where the two shapes filter at different plan points (r11: the
-    window buffers hot grams' full doc sets, so corpus-scale inputs
-    switch to the bounded groupBy shape)."""
+def test_repeated_spans_dup_mode_parity(spark, force_wider_than_floor):
+    """The one-window collect_set shape (wider_than_floor False), the
+    two-shuffle groupBy+semi-join corpus-scale shape (True) and the real
+    data-adaptive rule (None) produce IDENTICAL spans — including under
+    the max_gram_docs cap, where the two shapes filter at different plan
+    points (r11: the window buffers hot grams' full doc sets, so
+    corpus-scale inputs switch to the bounded groupBy shape)."""
     shared = "one two three four five six seven eight"
     boiler = "b1 b2 b3 b4 b5 b6"
     texts = (
@@ -185,25 +185,22 @@ def test_repeated_spans_dup_mode_parity(spark):
         + ["no overlap here at all ok"]
     )
     docs = _docs(spark, texts)
-    for cap in (None, 3):
-        ref = sorted(
+
+    def spans(cap, mode):
+        force_wider_than_floor(mode)
+        return sorted(
             map(
                 tuple,
                 repeated_ngram_spans(
-                    docs, n=6, min_docs=2, max_gram_docs=cap, dup_via_window=True
+                    docs, n=6, min_docs=2, max_gram_docs=cap
                 ).collect(),
             )
         )
-        for mode in (False, None):
-            got = sorted(
-                map(
-                    tuple,
-                    repeated_ngram_spans(
-                        docs, n=6, min_docs=2, max_gram_docs=cap, dup_via_window=mode
-                    ).collect(),
-                )
-            )
-            assert got == ref, (cap, mode)
+
+    for cap in (None, 3):
+        ref = spans(cap, False)
+        for mode in (True, None):
+            assert spans(cap, mode) == ref, (cap, mode)
 
 
 # ---------------------------------------------------------------------------

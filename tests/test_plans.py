@@ -313,6 +313,92 @@ def test_broadcast_budget_follows_session_heap(spark):
     assert not (2 * est <= budget)
 
 
+def test_input_paths_strip_file_scheme_and_see_through_filters(spark, tmp_path):
+    """input_paths is the one df.inputFiles() reader: `file://` is
+    stripped, a filtered / projected frame reports its scan's files, and
+    an in-memory frame reports none."""
+    from esper_tv_spark.plans.partitions import input_paths
+
+    p = str(tmp_path / "t.parquet")
+    spark.range(1000).withColumn("x", F.col("id") * 2).write.parquet(p)
+    df = spark.read.parquet(p)
+    raw = df.inputFiles()
+    assert raw and all(f.startswith("file://") for f in raw)
+    paths = input_paths(df)
+    assert paths == [f[len("file://"):] for f in raw]
+    assert all(os.path.isfile(f) for f in paths)
+    assert input_paths(df.where("id % 2 = 0").select("x")) == paths
+    assert input_paths(spark.createDataFrame([(1,)], "a int")) == []
+
+
+def test_wider_than_floor_boundary(spark, tmp_path):
+    """The size-adaptive predicate: input bytes x blowup / 256MB tasks
+    strictly above the session's shuffle-partition floor.  A blowup that
+    puts a file-backed parquet exactly AT the floor is False, just above
+    is True; an in-memory frame is False at any blowup."""
+    import math
+
+    from esper_tv_spark.plans.partitions import (
+        input_bytes,
+        input_paths,
+        wider_than_floor,
+    )
+
+    task = 256 * 1024 * 1024
+    p = str(tmp_path / "t.parquet")
+    spark.range(5000).coalesce(1).write.parquet(p)
+    df = spark.read.parquet(p)
+    n_bytes = input_bytes(input_paths(df))
+    floor_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n_bytes > 0 and floor_n == 4
+    at = floor_n * task / n_bytes
+    # land on the float blowup whose product is exactly the floor
+    while n_bytes * at / task > floor_n:
+        at = math.nextafter(at, 0.0)
+    while n_bytes * at / task < floor_n:
+        at = math.nextafter(at, math.inf)
+    assert n_bytes * at / task == floor_n
+    assert not wider_than_floor(df, at)
+    assert wider_than_floor(df, at * (1 + 1e-9))
+    assert wider_than_floor(df.where("id > 10").select("id"), at * 1.01)
+    assert not wider_than_floor(spark.createDataFrame([(1,)], "a int"), 1e18)
+
+
+def test_parquet_footer_probes_file_and_nested_dir(spark, tmp_path):
+    """parquet_num_rows (footer counts) and parquet_list_dim (one-row
+    list-length probe) on a single file and on a partitioned directory
+    whose part files sit in key=value subdirectories."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from esper_tv_spark.plans.partitions import parquet_list_dim, parquet_num_rows
+
+    f = str(tmp_path / "one.parquet")
+    pq.write_table(
+        pa.table({"id": [1, 2, 3], "vec": [[0.5] * 7, [1.0] * 7, [2.0] * 7]}), f
+    )
+    assert parquet_num_rows(f) == 3
+    assert parquet_list_dim(f, "vec") == 7
+
+    d = str(tmp_path / "nested")
+    (
+        spark.range(120)
+        .select(
+            (F.col("id") % 3).alias("k"),
+            F.array_repeat(F.col("id").cast("float"), 5).alias("embedding"),
+        )
+        .write.partitionBy("k")
+        .parquet(d)
+    )
+    assert not any(n.endswith(".parquet") for n in os.listdir(d))
+    assert parquet_num_rows(d) == 120
+    assert parquet_list_dim(d) == 5
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(FileNotFoundError):
+        parquet_list_dim(str(empty))
+
+
 def test_q92_ivfpq_probe_is_pruned_joinless_scan(spark):
     """The combined IVF-PQ probe: cells scan partition-pruned on `cell`,
     LUT a literal (no join anywhere), ≤1 shuffle (the TakeOrdered)."""

@@ -581,11 +581,12 @@ def test_lsh_plan_sizing():
         lsh_plan(16, 1.0)
 
 
-def test_lsh_near_dup_cache_mode_parity(spark):
-    """cache_shingles is a pure execution-strategy knob (r10: default None
-    resolves from input bytes — tiny corpora skip the cache barrier, the
-    r4 sf100 corpus keeps the cached plan): all three modes must return
-    the identical verified pair set."""
+def test_lsh_near_dup_cache_mode_parity(spark, force_wider_than_floor):
+    """Caching the shingle table is a pure execution-strategy choice (r10:
+    decided from input bytes by plans.partitions.wider_than_floor — tiny
+    corpora skip the cache barrier, the r4 sf100 corpus keeps the cached
+    plan): the real rule and both pinned branches must return the
+    identical verified pair set."""
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox jumps over the lazy dog"),
@@ -598,12 +599,52 @@ def test_lsh_near_dup_cache_mode_parity(spark):
     )
     outs = []
     for mode in (None, True, False):
-        rows = dedup.lsh_near_dup(docs, cache_shingles=mode).collect()
+        force_wider_than_floor(mode)
+        rows = dedup.lsh_near_dup(docs).collect()
         outs.append(sorted((r.id_a, r.id_b, r.jaccard) for r in rows))
         spark.catalog.clearCache()
     assert outs[0] == outs[1] == outs[2]
     # the exact-dup pair must be found with jaccard 1.0
     assert any(a == 1 and b == 3 and j == 1.0 for a, b, j in outs[0])
+
+
+def test_lsh_near_dup_releases_previous_shingle_cache(
+    spark, force_wider_than_floor, monkeypatch
+):
+    """The wide branch caches the shingle table site-registered: a second
+    call releases the first call's table instead of leaving one ~30x-input
+    cached table per call in executor storage."""
+    from pyspark.storagelevel import StorageLevel
+
+    made = []
+    real = dedup.shingle_sets
+
+    def recording(*a, **kw):
+        made.append(real(*a, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(dedup, "shingle_sets", recording)
+    force_wider_than_floor(True)
+
+    def corpus(extra):
+        return spark.createDataFrame(
+            [
+                (1, "the quick brown fox jumps over the lazy dog"),
+                (2, "the quick brown fox jumps over the lazy dog"),
+                (3, extra),
+            ],
+            "doc_id long, text string",
+        )
+
+    spark.catalog.clearCache()
+    try:
+        dedup.lsh_near_dup(corpus("first corpus tail text")).collect()
+        assert made[0].storageLevel != StorageLevel.NONE
+        dedup.lsh_near_dup(corpus("second corpus tail text")).collect()
+        assert made[1].storageLevel != StorageLevel.NONE
+        assert made[0].storageLevel == StorageLevel.NONE
+    finally:
+        spark.catalog.clearCache()
 
 
 def test_srp_index_probe_fast_matches_slow(spark, tmp_path):

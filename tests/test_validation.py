@@ -273,10 +273,11 @@ SELECT * FROM out_u UNION ALL SELECT * FROM out_a
     assert got == want
 
 
-def test_bootstrap_one_pass_parity(spark):
-    """one_pass True (single persisted groupBy(unit,pred,truth) base —
-    the corpus-scale shape) / False (five direct aggregations — the
-    bench-scale shape) / None (data-adaptive) produce IDENTICAL rows:
+def test_bootstrap_one_pass_parity(spark, force_wider_than_floor):
+    """The single persisted groupBy(unit,pred,truth) base (wider_than_floor
+    True — the corpus-scale shape), five direct aggregations (False — the
+    bench-scale shape) and the real data-adaptive rule (None) produce
+    IDENTICAL rows:
     every derived aggregate is an additive regroup of the base counts
     (r11, the size-adaptive switch the r10 verdict prescribed)."""
     import random
@@ -291,12 +292,13 @@ def test_bootstrap_one_pass_parity(spark):
     labeled = spark.createDataFrame(rows, "unit int, pred string, truth string")
 
     def got(mode):
+        force_wider_than_floor(mode)
         return sorted(
             map(
                 tuple,
                 bootstrap_adjusted_totals(
                     labeled, "unit", "pred", "truth",
-                    trials=25, k=12, seed=5, one_pass=mode,
+                    trials=25, k=12, seed=5,
                 ).collect(),
             )
         )

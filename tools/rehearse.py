@@ -73,6 +73,7 @@ def main() -> int:
     if not args.skip_walls:
         import __spark_entry__ as m
         from esper_tv_spark import get_spark
+        from esper_tv_spark.plans.partitions import parquet_num_rows
         from verify_plants import expected_pairs, score_plants
 
         spark = get_spark(f"rehearse-{args.tag}")
@@ -107,7 +108,7 @@ def main() -> int:
         from esper_tv_spark.operators.dedup import recommended_clusters, semantic_dedup
 
         emb = m._t(spark, SF100, "embeddings")
-        n = m._parquet_num_rows(os.path.join(SF100, "embeddings.parquet"))
+        n = parquet_num_rows(os.path.join(SF100, "embeddings.parquet"))
         k = recommended_clusters(n)
         t0 = time.time()
         cents = (
@@ -134,7 +135,7 @@ def main() -> int:
         walls = {}
         for tag, d in (("sf1", SF1), ("sf10", SF10)):
             embx = m._t(spark, d, "embeddings")
-            nx = m._parquet_num_rows(os.path.join(d, "embeddings.parquet"))
+            nx = parquet_num_rows(os.path.join(d, "embeddings.parquet"))
             kx = recommended_clusters(nx)
             t0 = time.time()
             cx = (
@@ -210,7 +211,7 @@ def main() -> int:
         shutil.rmtree(work, ignore_errors=True)
         os.makedirs(work)
         emb1 = m._t(spark, SF1, "embeddings").select("vec_id", "embedding")
-        n1 = m._parquet_num_rows(os.path.join(SF1, "embeddings.parquet"))
+        n1 = parquet_num_rows(os.path.join(SF1, "embeddings.parquet"))
         cut = int(n1 * 0.75)
         idxc = os.path.join(work, "ivf")
         t0 = time.time()

@@ -23,7 +23,7 @@ Selection = FLAGSHIPS ∪ CHANGED ∪ STALEST-fill, where
   * a changed `__spark_entry__.py` is resolved per-FUNCTION: diff hunks
     are mapped to enclosing module-level defs, and helper changes
     propagate to queries through the module call graph (so touching
-    `_parquet_list_dim` selects every query that calls it, but an
+    `_ivf_index_dir` selects every query that calls it, but an
     unrelated query's docstring edit selects only that query);
 - STALEST-fill orders the remainder by the round of their newest green
   CORRECTNESS_r*.json row (oldest record first) so records keep

@@ -200,9 +200,10 @@ def q85_check(spark, m, sf_dir: str, sample: int) -> dict:
     from pyspark.sql import functions as F
 
     from esper_tv_spark.operators.dedup import recommended_clusters, semantic_dedup
+    from esper_tv_spark.plans.partitions import parquet_num_rows
 
     emb = m._t(spark, sf_dir, "embeddings")
-    n = m._parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
+    n = parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
     k = recommended_clusters(n)
     cents = (
         emb.orderBy(F.col("vec_id").asc())
@@ -316,12 +317,14 @@ def q103_check(spark, m, sf_dir: str, sample: int) -> dict:
     (c) sampled ASSIGNMENT replay: a deterministic id sample across the
         WHOLE corpus re-derives argmin-d2 cell from base embeddings and
         compares to the hive partition the row was stored under."""
+    from esper_tv_spark.plans.partitions import parquet_num_rows
+
     idx = m._hier_ivf_index_dir(spark, sf_dir, n_cells=16, n_groups=4, train_iters=2)
     got = [
         (int(r["vec_id"]), float(r["cosine_sim"]))
         for r in m.q103_trained_groups_ann(spark, sf_dir).collect()
     ]
-    n = m._parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
+    n = parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
 
     con = _duck()
     con.execute(f"CREATE VIEW emb AS SELECT * FROM '{sf_dir}/embeddings.parquet'")
